@@ -1,42 +1,126 @@
 package graft.core
 
+import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions._
 
-/** Distributed execution of order-sensitive operators.
+/** Distributed execution of order-sensitive operators: the one kernel
+  * that both the typed `Dataset[Elem[A]]` layer and the Row layer
+  * (`graft.operators.RowExec`) run on.
   *
   * The reference's stateful combinators (scan/mapAccum/pairs/consecutive,
   * reference `src/Data/Conduino/Combinators.hs:344-410`) are sequential by
   * nature. A naive Spark port would single-partition the stream. Instead,
-  * the engine uses two scale-friendly schemes:
+  * every ordered operator is one scheme, [[prefixCarry]]: range-partition
+  * by the order columns, summarize each partition in parallel (one job,
+  * O(numPartitions) summaries — not rows — to the driver), scan the
+  * summaries into per-partition carry-ins, broadcast them, and finish
+  * each partition locally in a second parallel pass. It comes in three
+  * instances:
   *
-  *  1. '''Prefix-combine scan''' (for folds whose accumulator merges):
-  *     range-partition by `seq`, fold each partition in parallel, collect
-  *     the numPartitions partial accumulators (not rows!) to the driver,
-  *     prefix-combine them into per-partition carry-in offsets, broadcast,
-  *     and finish each partition locally. Two parallel passes, O(P) driver
-  *     work. This is the classic parallel-prefix-sum on top of Spark.
+  *  1. '''Prefix-combine scan''' (folds whose accumulator merges):
+  *     summary = the partition's fold, carry = the prefix combine of the
+  *     folds before it. The classic parallel prefix sum on top of Spark.
   *
-  *  2. '''Boundary exchange''' (for bounded-lookback ops — pairs, sliding
-  *     windows of n): each partition only needs the last n elements of its
-  *     predecessor. Collect the tiny per-partition tails, broadcast, and
-  *     prepend the carry on a single parallel pass.
+  *  2. '''Boundary exchange''' (bounded-lookback ops — pairs, sliding
+  *     windows of n): summary = the partition's last n elements, carry =
+  *     the last n elements before the partition ([[tailCarries]]).
   *
-  * Both avoid any global sort to one partition; the only serial state is
+  *  3. '''Dense ordinals''': summary = row count, carry = offset.
+  *
+  * None sorts the stream onto one partition; the only serial state is
   * O(numPartitions) on the driver.
   */
 private[graft] object OrderedExec {
 
-  /** Range-partition by seq + sort within partitions; persisted because
-    * callers run a small boundary/partial job plus the main job over it.
+  /** Range-partition by `by` into `numShufflePartitions` ranges and sort
+    * within partitions.
     */
-  def sorted[A](ds: Dataset[Elem[A]], parts: Int = 0): Dataset[Elem[A]] = {
-    val p =
-      if (parts > 0) parts
-      else ds.sparkSession.sessionState.conf.numShufflePartitions
-    ds.repartitionByRange(p, col("seq")).sortWithinPartitions(col("seq"))
+  def sorted[T](ds: Dataset[T], by: Seq[Column] = Seq(col("seq"))): Dataset[T] =
+    ds.repartitionByRange(ds.sparkSession.sessionState.conf.numShufflePartitions, by: _*)
+      .sortWithinPartitions(by: _*)
+
+  /** One job: `summarize` every partition; results in partition order
+    * (`collect` concatenates per-partition results by partition index).
+    * Collected as `Any` so callers need no `ClassTag[P]`.
+    */
+  def partials[T, P](rdd: RDD[T])(summarize: Iterator[T] => P): Vector[P] =
+    rdd.mapPartitions(it => Iterator[Any](summarize(it))).collect()
+      .iterator.map(_.asInstanceOf[P]).toVector
+
+  /** The prefix-carry kernel. Sorts `in` by `by` and persists the sorted
+    * copy; `carries` turns the n per-partition summaries into n+1 carries
+    * (carry-in of partition i at index i, the carry past the last
+    * partition at index n); `finish(carryIn, partition)` produces each
+    * output partition; `toDataset` wraps the output RDD, which is then
+    * checkpointed. The sorted copy is released on every exit path,
+    * including a throwing closure or a failed checkpoint job.
+    *
+    * Returns the checkpointed output and the final carry.
+    */
+  def prefixCarry[T, P, C, U: ClassTag](in: Dataset[T], by: Seq[Column])(
+      summarize: Iterator[T] => P)(
+      carries: Vector[P] => Vector[C])(
+      finish: (C, Iterator[T]) => Iterator[U])(
+      toDataset: RDD[U] => Dataset[U]): (Dataset[U], C) = {
+    val s = sorted(in, by).persist()
+    try {
+      val rdd = s.rdd
+      val cs = carries(partials(rdd)(summarize))
+      val bCarries = in.sparkSession.sparkContext.broadcast(cs)
+      val out = rdd.mapPartitionsWithIndex((i, it) => finish(bCarries.value(i), it))
+      (Materialize.checkpoint(toDataset(out)), cs.last)
+    } finally s.unpersist()
+  }
+
+  /** Boundary carries: carry-in of partition i = the last `n` elements of
+    * the concatenated tails of partitions 0..i-1. Valid because each tail
+    * keeps at least the globally needed suffix.
+    */
+  private def tailCarries[T](tails: Vector[List[T]], n: Int): Vector[List[T]] =
+    tails.scanLeft(List.empty[T])((acc, t) => (acc ++ t).takeRight(n))
+
+  /** Boundary exchange over a `seq`-ordered stream: run `f(carryIn,
+    * partition)` over each sorted partition, where carryIn is the last
+    * `tailN` elements globally before the partition. Also returns the
+    * global tail (the last ≤ tailN elements of the whole stream).
+    */
+  def boundaryExchange[T, U: ClassTag](in: Dataset[T], tailN: Int)(
+      f: (List[T], Iterator[T]) => Iterator[U])(
+      toDataset: RDD[U] => Dataset[U]): (Dataset[U], List[T]) = {
+    require(tailN >= 0)
+    prefixCarry(in, Seq(col("seq")))(lastN(_, tailN))(tailCarries(_, tailN))(f)(toDataset)
+  }
+
+  /** The last ≤ n elements of a partition (ring buffer). */
+  private def lastN[T](it: Iterator[T], n: Int): List[T] = {
+    val buf = new scala.collection.mutable.ArrayDeque[T]()
+    it.foreach { t => buf.append(t); if (buf.size > n) buf.removeHead() }
+    buf.toList
+  }
+
+  /** Dense ordinals 0..n-1 in `by` order: `stamp(ordinal, element)` per
+    * element, from per-partition counts and their driver prefix sum (no
+    * global window).
+    */
+  def denseOrdinals[T, U: ClassTag](in: Dataset[T], by: Seq[Column])(
+      stamp: (Long, T) => U)(toDataset: RDD[U] => Dataset[U]): Dataset[U] =
+    prefixCarry(in, by)(countRows)(_.scanLeft(0L)(_ + _)) { (offset, it) =>
+      var k = offset
+      it.map { t => val u = stamp(k, t); k += 1; u }
+    }(toDataset)._1
+
+  /** Long loop, not Iterator.size: `.size` returns Int and wraps negative
+    * past 2^31 rows per partition — inside the design envelope at
+    * 100 TB — corrupting every downstream ordinal.
+    */
+  private def countRows[T](it: Iterator[T]): Long = {
+    var n = 0L
+    while (it.hasNext) { it.next(); n += 1 }
+    n
   }
 
   /** Running fold with mergeable accumulators: emits the accumulator after
@@ -46,69 +130,18 @@ private[graft] object OrderedExec {
     */
   def scanCombine[A, B: TypeTag](in: Dataset[Elem[A]], zero: B,
                                  step: (B, A) => B,
-                                 combine: (B, B) => B): Dataset[Elem[B]] = {
-    val spark = in.sparkSession
-    implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-    val s = sorted(in).persist()
-    // toList before sortBy/map: avoids needing a ClassTag[B] for Array ops
-    val partials = s.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        Iterator((i, it.foldLeft(zero)((b, e) => step(b, e.value))))
-      }
-      .collect().toList.sortBy(_._1).map(_._2)
-    // carry-in for partition i = combine of partials 0..i-1
-    val carries = partials.scanLeft(zero)(combine).toVector
-    val bCarries = spark.sparkContext.broadcast(carries)
-    val rdd = s.rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = bCarries.value(i)
+                                 combine: (B, B) => B): Dataset[Elem[B]] =
+    prefixCarry(in, Seq(col("seq")))(_.foldLeft(zero)((b, e) => step(b, e.value)))(
+      _.scanLeft(zero)(combine)) { (carry, it) =>
+      var acc = carry
       it.map { e => acc = step(acc, e.value); Elem(e.seq, acc) }
-    }
-    // Materialize, then free the sorted intermediate (persist lifecycle).
-    val out = Materialize.checkpoint(spark.createDataset(rdd))
-    s.unpersist()
-    out
-  }
+    }(in.sparkSession.createDataset(_)(Elem.enc[B]))._1
 
-  /** Boundary exchange: run `f(carryIn, partitionElems)` over each sorted
-    * partition, where carryIn is the last `tailN` elements globally before
-    * the partition. Returns the transformed stream plus the global tail
-    * (last ≤ tailN elements of the whole stream) for finalizers.
-    */
+  /** Typed boundary exchange: [[boundaryExchange]] over `Elem[A]`. */
   def mapWithCarry[A, B: TypeTag](in: Dataset[Elem[A]], tailN: Int)(
       f: (List[Elem[A]], Iterator[Elem[A]]) => Iterator[Elem[B]])
-      : (Dataset[Elem[B]], List[Elem[A]]) = {
-    require(tailN >= 0)
-    val spark = in.sparkSession
-    implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-    val s = sorted(in).persist()
-    val tails: Array[(Int, List[Elem[A]])] = s.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        // last ≤ tailN elements of this partition, cheaply (ring buffer)
-        val buf = new scala.collection.mutable.ArrayDeque[Elem[A]]()
-        it.foreach { e =>
-          buf.append(e); if (buf.size > tailN) buf.removeHead()
-        }
-        Iterator((i, buf.toList))
-      }
-      .collect().sortBy(_._1)
-    // carry-in for partition i = last tailN of concat(tails of 0..i-1);
-    // valid because each tail keeps at least the globally-needed suffix.
-    val carries = new Array[List[Elem[A]]](tails.length + 1)
-    carries(0) = Nil
-    var acc: List[Elem[A]] = Nil
-    tails.foreach { case (i, t) =>
-      acc = (acc ++ t).takeRight(tailN)
-      carries(i + 1) = acc
-    }
-    val globalTail = acc
-    val bCarries = spark.sparkContext.broadcast(carries)
-    val rdd = s.rdd.mapPartitionsWithIndex { (i, it) =>
-      f(bCarries.value(i), it)
-    }
-    val out = Materialize.checkpoint(spark.createDataset(rdd))
-    s.unpersist()
-    (out, globalTail)
-  }
+      : (Dataset[Elem[B]], List[Elem[A]]) =
+    boundaryExchange(in, tailN)(f)(in.sparkSession.createDataset(_)(Elem.enc[B]))
 
   /** Sequential fallback for arbitrary (non-mergeable) state transitions:
     * one sorted partition, one pass. Correct for any closure; only for

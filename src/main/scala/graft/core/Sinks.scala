@@ -28,11 +28,8 @@ final case class FoldSink[A, B, R](
 
   def apply(in: SStream[A]): R = combine match {
     case Some(c) =>
-      val parts = OrderedExec.sorted(in.ds).rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          Iterator((i, it.foldLeft(zero)((b, e) => step(b, e.value))))
-        }
-        .collect().toList.sortBy(_._1).map(_._2)
+      val parts = OrderedExec.partials(OrderedExec.sorted(in.ds).rdd)(
+        _.foldLeft(zero)((b, e) => step(b, e.value)))
       finish(parts.foldLeft(zero)(c))
     case None =>
       finish(in.toLocalIterator.foldLeft(zero)(step))
@@ -108,13 +105,10 @@ object Sinks {
   def foldrCombine[A, B](zero: B)(step: (A, B) => B)(c: (B, B) => B): Sink[A, B] =
     new Sink[A, B] {
       def apply(in: SStream[A]): B = {
-        val parts = OrderedExec.sorted(in.ds).rdd
-          .mapPartitionsWithIndex { (i, it) =>
-            // right fold needs the partition's tail first: materialize the
-            // (bounded, range-partitioned) partition and foldRight it
-            Iterator((i, it.toIndexedSeq.foldRight(zero)((e, b) => step(e.value, b))))
-          }
-          .collect().toList.sortBy(_._1).map(_._2)
+        // right fold needs the partition's tail first: materialize the
+        // (bounded, range-partitioned) partition and foldRight it
+        val parts = OrderedExec.partials(OrderedExec.sorted(in.ds).rdd)(
+          _.toIndexedSeq.foldRight(zero)((e, b) => step(e.value, b)))
         parts.foldRight(zero)(c)
       }
     }

@@ -4,93 +4,45 @@ import org.apache.spark.sql._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Row-level (DataFrame) distributed execution of order-sensitive
-  * operators — the columnar mirror of `graft.core.OrderedExec`.
+import graft.core.OrderedExec
+
+/** Row-level (DataFrame) order-sensitive operators. A "stream" here is a
+  * DataFrame with a `seq: Long` column.
   *
-  * A "stream" here is a DataFrame with a `seq: Long` column. The same two
-  * scale schemes as the typed layer (SURVEY.md §4.1):
-  *
-  *  1. prefix-combine (running aggregates): range-partition by seq, fold
-  *     partitions in parallel, prefix-combine the O(P) partials on the
-  *     driver, broadcast carries, finish in one parallel pass;
-  *  2. boundary exchange (bounded lookback — lag/pairs/sliding windows):
-  *     collect only the tiny per-partition tails, broadcast, prepend.
-  *
-  * Neither scheme ever brings rows-proportional data to the driver, so the
-  * plans survive a 100×/1000-executor scale-up; the only serial state is
-  * O(numPartitions).
+  * These are Row-shaping adapters only: every operator runs on the one
+  * prefix-carry kernel in `graft.core.OrderedExec`, the same code path as
+  * the typed layer (prefix-combine for running aggregates, boundary
+  * exchange for bounded lookback, counts + offsets for dense ordinals).
+  * No scheme ever brings rows-proportional data to the driver; the only
+  * serial state is O(numPartitions).
   */
 object RowExec {
-
-  private def parts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  /** Range-partition by seq + sort within partitions; persisted because
-    * callers run a small boundary/partial job plus the main job over it
-    * (unpersisted by the caller once the result is materialized).
-    */
-  private def sortedBySeq(df: DataFrame): DataFrame =
-    df.repartitionByRange(parts(df), col("seq"))
-      .sortWithinPartitions(col("seq"))
-      .persist()
 
   /** Distributed running sum of a Long-valued expression, appended as
     * `outCol` (conduino `scan (+)`, reference `Combinators.hs:362-371`,
     * over a columnar stream). Nulls contribute 0.
     */
   def runningSumLong(df: DataFrame, valueExpr: Column, outCol: String): DataFrame = {
-    val spark = df.sparkSession
     val withV = df.withColumn("__v", valueExpr.cast(LongType))
-    val s = sortedBySeq(withV)
-    val idx = s.schema.fieldIndex("__v")
-    val partials = s.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        Iterator((i, it.foldLeft(0L)((b, r) =>
-          b + (if (r.isNullAt(idx)) 0L else r.getLong(idx)))))
-      }
-      .collect().toList.sortBy(_._1).map(_._2)
-    val carries = partials.scanLeft(0L)(_ + _).toVector
-    val bCarries = spark.sparkContext.broadcast(carries)
-    val outSchema = s.schema.add(outCol, LongType, nullable = false)
-    val rdd = s.rdd.mapPartitionsWithIndex { (i, it) =>
-      var acc = bCarries.value(i)
+    val idx = withV.schema.fieldIndex("__v")
+    val outSchema = withV.schema.add(outCol, LongType, nullable = false)
+    OrderedExec.prefixCarry(withV, Seq(col("seq")))(
+      _.foldLeft(0L)((b, r) => b + (if (r.isNullAt(idx)) 0L else r.getLong(idx))))(
+      _.scanLeft(0L)(_ + _)) { (carry, it) =>
+      var acc = carry
       it.map { r =>
         acc += (if (r.isNullAt(idx)) 0L else r.getLong(idx))
         Row.fromSeq(r.toSeq :+ acc)
       }
-    }
-    val out = graft.core.Materialize.checkpoint(spark.createDataFrame(rdd, outSchema))
-    s.unpersist()
-    out.drop("__v")
+    }(df.sparkSession.createDataFrame(_, outSchema))._1.drop("__v")
   }
 
   /** Boundary exchange over Rows: run `f(carry, partition)` per sorted
     * partition, carry = last `tailN` rows globally before the partition.
     */
   def mapWithCarry(df: DataFrame, tailN: Int, outSchema: StructType)(
-      f: (List[Row], Iterator[Row]) => Iterator[Row]): DataFrame = {
-    require(tailN >= 0)
-    val spark = df.sparkSession
-    val s = sortedBySeq(df)
-    val tails = s.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        val buf = new scala.collection.mutable.ArrayDeque[Row]()
-        it.foreach { r => buf.append(r); if (buf.size > tailN) buf.removeHead() }
-        Iterator((i, buf.toList))
-      }
-      .collect().toList.sortBy(_._1)
-    val carries = new Array[List[Row]](tails.length + 1)
-    carries(0) = Nil
-    var acc: List[Row] = Nil
-    tails.foreach { case (i, t) =>
-      acc = (acc ++ t).takeRight(tailN); carries(i + 1) = acc
-    }
-    val bCarries = spark.sparkContext.broadcast(carries.toVector)
-    val rdd = s.rdd.mapPartitionsWithIndex { (i, it) => f(bCarries.value(i), it) }
-    val out = graft.core.Materialize.checkpoint(spark.createDataFrame(rdd, outSchema))
-    s.unpersist()
-    out
-  }
+      f: (List[Row], Iterator[Row]) => Iterator[Row]): DataFrame =
+    OrderedExec.boundaryExchange(df, tailN)(f)(df.sparkSession.createDataFrame(_, outSchema))._1
 
   /** pairs (reference `Combinators.hs:379-385`) at Row level: each row
     * paired with the previous row's `valueCols`, prefixed `prev_`; the
@@ -142,30 +94,9 @@ object RowExec {
     * global window) at Row level.
     */
   def withDenseSeq(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
     val noSeq = if (df.columns.contains("seq")) df.drop("seq") else df
-    val s = noSeq
-      .repartitionByRange(parts(df), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist()
-    val counts = s.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        // Long loop, not Iterator.size (Int — wraps past 2^31 rows per
-        // partition; see Ordinals.zipWithOrdinal)
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator((i, n))
-      }
-      .collect().toList.sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _).toVector
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-    val outSchema = StructType(StructField("seq", LongType, nullable = false) +: s.schema.fields.toSeq)
-    val rdd = s.rdd.mapPartitionsWithIndex { (i, it) =>
-      var k = bOffsets.value(i)
-      it.map { r => val out = Row.fromSeq(k +: r.toSeq); k += 1; out }
-    }
-    val out = graft.core.Materialize.checkpoint(spark.createDataFrame(rdd, outSchema))
-    s.unpersist()
-    out
+    val outSchema = StructType(StructField("seq", LongType, nullable = false) +: noSeq.schema.fields.toSeq)
+    OrderedExec.denseOrdinals(noSeq, sortCols)((k, r: Row) => Row.fromSeq(k +: r.toSeq))(
+      df.sparkSession.createDataFrame(_, outSchema))
   }
 }

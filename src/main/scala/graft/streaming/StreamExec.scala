@@ -70,14 +70,14 @@ object StreamExec {
     * large-state escape hatch: it forces RocksDB for every stateful
     * query regardless of plan shape.
     */
-  private val ForceRocksKey = "graft.streaming.forceRocksDB"
+  private[graft] val ForceRocksKey = "graft.streaming.forceRocksDB"
 
-  private def needsRocks(out: DataFrame): Boolean =
+  private[graft] def needsRocks(out: DataFrame): Boolean =
     // the logical CLASS, not nodeName text (advisor finding: a node
     // rename would silently flip providers); TransformWithStateInPySpark
     // is the Python twin — this library never plans it, but matching the
     // class hierarchy keeps the check rename-proof for the node we use
-    out.sparkSession.conf.get(ForceRocksKey, "false") == "true" ||
+    out.sparkSession.conf.get(ForceRocksKey, "false").equalsIgnoreCase("true") ||
       out.queryExecution.logical.collectFirst {
         case p: org.apache.spark.sql.catalyst.plans.logical.TransformWithState => p
       }.isDefined

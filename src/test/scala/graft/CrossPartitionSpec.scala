@@ -2,7 +2,9 @@ package graft
 
 import graft.core._
 import graft.operators._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Cross-partition stress: the distributed order schemes (prefix-combine,
   * boundary exchange, cut filters) against the list oracle on inputs
@@ -17,22 +19,45 @@ class CrossPartitionSpec extends SparkSpec {
 
   private lazy val src: SStream[Long] = Sources.fromSeq(spark, xs)
 
+  /** Every carry-chain test also runs on an empty input and on fewer
+    * rows (3) than shuffle partitions (4).
+    */
+  private val inputs: Seq[Vector[Long]] = Seq(xs, Vector.empty, xs.take(3))
+
+  private def stream(in: Vector[Long]): SStream[Long] =
+    if (in eq xs) src else Sources.fromSeq(spark, in)
+
+  /** `in` as a Row stream (seq, v), scattered over 8 input partitions. */
+  private def rows(in: Vector[Long]): DataFrame = {
+    import spark.implicits._
+    in.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("seq", "v").repartition(8)
+  }
+
+  private def longs(df: DataFrame, c: String): List[Long] =
+    df.orderBy("seq").select(c).collect().map(_.getLong(0)).toList
+
   test("scanCombine across partitions == sequential scanLeft") {
-    val got = (src |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + a)(_ + _))
-      .into(Sinks.sinkList)
-    assert(got == xs.scanLeft(0L)(_ + _).tail.toList)
+    for (in <- inputs) {
+      val got = (stream(in) |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + a)(_ + _))
+        .into(Sinks.sinkList)
+      assert(got == in.scanLeft(0L)(_ + _).tail.toList)
+    }
   }
 
   test("pairs across partitions == xs.zip(xs.tail)") {
-    val got = (src |> Pipes.pairs[Long]).into(Sinks.sinkList)
-    assert(got == xs.zip(xs.tail).toList)
+    for (in <- inputs) {
+      val got = (stream(in) |> Pipes.pairs[Long]).into(Sinks.sinkList)
+      assert(got == in.zip(in.drop(1)).toList)
+    }
   }
 
   test("consecutive across partitions == sliding with leading partials + final") {
     val n = 4
-    val got = (src |> Pipes.consecutive[Long](n)).into(Sinks.sinkList)
-    val expect = (0 to N).map(i => xs.slice(math.max(0, i - n), i).toSeq).toList
-    assert(got == expect)
+    for (in <- inputs) {
+      val got = (stream(in) |> Pipes.consecutive[Long](n)).into(Sinks.sinkList)
+      val expect = (0 to in.size).map(i => in.slice(math.max(0, i - n), i).toSeq).toList
+      assert(got == expect)
+    }
   }
 
   test("take/drop cuts land exactly at arbitrary positions") {
@@ -43,12 +68,78 @@ class CrossPartitionSpec extends SparkSpec {
   }
 
   test("columnar running sum across partitions == prefix sums") {
+    for (in <- inputs)
+      assert(longs(RowExec.runningSumLong(rows(in), col("v"), "rs"), "rs") ==
+        in.scanLeft(0L)(_ + _).tail.toList)
+  }
+
+  test("Row mapWithCarry (q_map_accum delta) across partitions == list deltas") {
+    val schema = StructType(Seq(StructField("seq", LongType), StructField("delta", LongType)))
+    for (in <- inputs) {
+      val got = RowExec.mapWithCarry(rows(in), 1, schema) { (carry, it) =>
+        var prev = carry.lastOption.map(_.getLong(1)).getOrElse(0L)
+        it.map { r => val v = r.getLong(1); val d = v - prev; prev = v; Row(r.getLong(0), d) }
+      }
+      assert(longs(got, "delta") == in.zip(0L +: in).map { case (v, p) => v - p }.toList)
+    }
+  }
+
+  test("pairsDf across partitions == xs.zip(xs.tail)") {
+    for (in <- inputs) {
+      val got = RowExec.pairsDf(rows(in), Seq("v")).orderBy("seq")
+        .select("prev_v", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toList
+      assert(got == in.zip(in.drop(1)).toList)
+    }
+  }
+
+  test("consecutiveDf(n=4) across partitions == the previous <=4 values per row") {
+    val n = 4
+    for (in <- inputs) {
+      val got = RowExec.consecutiveDf(rows(in), "v", n).orderBy("seq")
+        .select("window").collect().map(_.getSeq[Long](0).toList).toList
+      assert(got == in.indices.map(i => in.slice(math.max(0, i - n), i).toList).toList)
+    }
+  }
+
+  test("withDenseSeq across partitions: shuffled unique keys get dense ordinals in key order") {
     import spark.implicits._
-    val df = xs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("seq", "v")
-      .repartition(8)
-    val got = RowExec.runningSumLong(df, col("v"), "rs")
-      .orderBy("seq").select("rs").collect().map(_.getLong(0)).toList
-    assert(got == xs.scanLeft(0L)(_ + _).tail.toList)
+    for (in <- inputs) {
+      // row j carries key 3·perm(j) − 7 and value in(perm(j)): key order is input order
+      val perm = new scala.util.Random(11).shuffle(in.indices.toVector)
+      val df = perm.zipWithIndex.map { case (p, j) => (j.toLong, p * 3L - 7, in(p)) }
+        .toDF("seq", "k", "v").repartition(8)
+      val got = RowExec.withDenseSeq(df, Seq(col("k"))).orderBy("seq")
+        .select("seq", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toList
+      assert(got == in.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toList)
+    }
+  }
+
+  test("ordered ops release their sorted copy when a closure throws") {
+    // LiftSpec's measure (non-checkpoint cached RDDs), by id: a failed
+    // checkpoint job's half-written output is unreferenced and reclaimed
+    // by the ContextCleaner after GC; a sorted copy the CacheManager
+    // still holds never is
+    def cachedNonCheckpoint: Set[Int] =
+      spark.sparkContext.getPersistentRDDs.filter(!_._2.isCheckpointed).keySet.toSet
+    val before = cachedNonCheckpoint
+    val last = xs.last
+    val boom: Long => Long = v => if (v == last) throw new IllegalStateException("boom") else v
+    val df = rows(xs)
+    intercept[Exception] { // throws in the finish pass, after the partials job
+      RowExec.mapWithCarry(df, 1, df.schema)((_, it) => it.map(r => Row(r.getLong(0), boom(r.getLong(1)))))
+    }
+    intercept[Exception] {
+      (src |> Pipes.map[Long, Long](boom) |> Pipes.pairs[Long]).into(Sinks.count)
+    }
+    intercept[Exception] {
+      RowExec.runningSumLong(df, udf(boom).apply(col("v")), "rs")
+    }
+    def lingering: Set[Int] = { System.gc(); cachedNonCheckpoint -- before }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    var left = lingering
+    while (left.nonEmpty && System.nanoTime() < deadline) { Thread.sleep(200); left = lingering }
+    assert(left.isEmpty, s"lingering caches: ${
+      spark.sparkContext.getPersistentRDDs.filter(e => left(e._1)).values.map(_.toString)}")
   }
 
   test("foldr on a large reversed stream == foldRight") {

@@ -326,6 +326,14 @@ class StreamingSpec extends SparkSpec {
       s"expected a TransformWithState operator in:\n${StreamExec.lastStreamingPlan}")
   }
 
+  test("StreamExec.needsRocks: forceRocksDB=TRUE (any case) forces RocksDB on a stateless plan") {
+    val stateless = spark.readStream.format("rate").load()
+    assert(!StreamExec.needsRocks(stateless))
+    spark.conf.set(StreamExec.ForceRocksKey, "TRUE")
+    try assert(StreamExec.needsRocks(stateless))
+    finally spark.conf.unset(StreamExec.ForceRocksKey)
+  }
+
   test("StreamExec.runStreamingComplete: final snapshot equals the batch agg") {
     import org.apache.spark.sql.functions._
     val rows = (1 to 20).map(i => (i % 3, i.toLong))

@@ -3,7 +3,7 @@ package graft.core
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql._
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
 
 /** One stream element: a global ordinal `seq` plus the payload `value`.
@@ -127,9 +127,14 @@ object Runner {
 object Ordinals {
 
   def zipWithOrdinal[A](ds: Dataset[A], sortCols: Seq[Column])
-                       (implicit enc: Encoder[Elem[A]]): Dataset[Elem[A]] =
-    OrderedExec.denseOrdinals(ds, sortCols)((k, a: A) => Elem(k, a))(
-      ds.sparkSession.createDataset(_)(enc))
+                       (implicit enc: Encoder[Elem[A]]): Dataset[Elem[A]] = {
+    val dec = OrderedExec.decoder(ds)
+    val out = encoderFor(enc)
+    OrderedExec.denseOrdinals(ds, sortCols, out.schema) { () =>
+      val (d, s) = (dec.createDeserializer(), out.createSerializer())
+      (k, r) => s(Elem(k, d(r)))
+    }.as(enc)
+  }
 
   /** Ordinal from an expression when the table already has a unique,
     * order-defining key (e.g. lineitem's l_orderkey*10+l_linenumber):

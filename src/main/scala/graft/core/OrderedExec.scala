@@ -1,11 +1,13 @@
 package graft.core
 
-import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Distributed execution of order-sensitive operators: the one kernel
   * that both the typed `Dataset[Elem[A]]` layer and the Row layer
@@ -31,6 +33,14 @@ import org.apache.spark.sql.functions._
   *
   *  3. '''Dense ordinals''': summary = row count, carry = offset.
   *
+  * One materialization: the sorted copy. The kernel runs on Spark's
+  * internal rows; the sorted input is stored once, as `UnsafeRow` copies,
+  * filled by the summary job itself. The finish is lazy: it reads that
+  * copy inside whichever job consumes the output, so every action on the
+  * output sees the same order (ties included) without sorting again.
+  * Typed closures decode and encode at the closure boundary with their
+  * encoders ([[decoder]]), once per row per pass.
+  *
   * None sorts the stream onto one partition; the only serial state is
   * O(numPartitions) on the driver.
   */
@@ -51,30 +61,41 @@ private[graft] object OrderedExec {
     rdd.mapPartitions(it => Iterator[Any](summarize(it))).collect()
       .iterator.map(_.asInstanceOf[P]).toVector
 
-  /** The prefix-carry kernel. Sorts `in` by `by` and persists the sorted
-    * copy; `carries` turns the n per-partition summaries into n+1 carries
-    * (carry-in of partition i at index i, the carry past the last
-    * partition at index n); `finish(carryIn, partition)` produces each
-    * output partition; `toDataset` wraps the output RDD, which is then
-    * checkpointed. The sorted copy is released on every exit path,
-    * including a throwing closure or a failed checkpoint job.
+  /** The prefix-carry kernel. Sorts `in` by `by` into a copy of its
+    * internal rows, marked for checkpointing before the summary job, so
+    * that job sorts, fills the copy and summarizes each partition at
+    * once. `carries` turns the n per-partition summaries into n+1
+    * carries (carry-in of partition i at index i, the carry past the last
+    * partition at index n). `finish(carryIn, partition)` produces each
+    * output partition of rows laid out as `outSchema`; it runs lazily,
+    * over the copy, in the jobs that consume the output. If the summary
+    * job (or `carries`) throws, the copy is released; otherwise it lives
+    * as long as the output does. Every row of the copy is its own object,
+    * so `summarize` and `finish` may keep references to rows.
     *
-    * Returns the checkpointed output and the final carry.
+    * Returns the output and the final carry.
     */
-  def prefixCarry[T, P, C, U: ClassTag](in: Dataset[T], by: Seq[Column])(
-      summarize: Iterator[T] => P)(
+  def prefixCarry[T, P, C](in: Dataset[T], by: Seq[Column], outSchema: StructType)(
+      summarize: Iterator[InternalRow] => P)(
       carries: Vector[P] => Vector[C])(
-      finish: (C, Iterator[T]) => Iterator[U])(
-      toDataset: RDD[U] => Dataset[U]): (Dataset[U], C) = {
-    val s = sorted(in, by).persist()
-    try {
-      val rdd = s.rdd
-      val cs = carries(partials(rdd)(summarize))
-      val bCarries = in.sparkSession.sparkContext.broadcast(cs)
-      val out = rdd.mapPartitionsWithIndex((i, it) => finish(bCarries.value(i), it))
-      (Materialize.checkpoint(toDataset(out)), cs.last)
-    } finally s.unpersist()
+      finish: (C, Iterator[InternalRow]) => Iterator[InternalRow]): (DataFrame, C) = {
+    val spark = in.sparkSession
+    val copy = Materialize.checkpointRdd(spark, sorted(in, by).queryExecution.toRdd.map(_.copy()))
+    val cs =
+      try carries(partials(copy)(summarize))
+      catch { case e: Throwable => copy.unpersist(blocking = false); throw e }
+    val bCarries = spark.sparkContext.broadcast(cs)
+    val out = copy.mapPartitionsWithIndex((i, it) => finish(bCarries.value(i), it))
+    (GraftColumnBridge.internalDataFrame(spark, out, outSchema), cs.last)
   }
+
+  /** `in`'s encoder, bound to the internal rows of `in`'s own plan: the
+    * decoder of the kernel's rows at a typed closure boundary. Decoders
+    * and encoders are not thread-safe, so each task creates its own
+    * deserializer and serializer from them.
+    */
+  def decoder[T](in: Dataset[T]): ExpressionEncoder[T] =
+    encoderFor(in.encoder).resolveAndBind(in.queryExecution.analyzed.output)
 
   /** Boundary carries: carry-in of partition i = the last `n` elements of
     * the concatenated tails of partitions 0..i-1. Valid because each tail
@@ -83,16 +104,16 @@ private[graft] object OrderedExec {
   private def tailCarries[T](tails: Vector[List[T]], n: Int): Vector[List[T]] =
     tails.scanLeft(List.empty[T])((acc, t) => (acc ++ t).takeRight(n))
 
-  /** Boundary exchange over a `seq`-ordered stream: run `f(carryIn,
-    * partition)` over each sorted partition, where carryIn is the last
-    * `tailN` elements globally before the partition. Also returns the
-    * global tail (the last ≤ tailN elements of the whole stream).
+  /** Boundary exchange over a `seq`-ordered stream of internal rows: run
+    * `f(carryIn, partition)` over each sorted partition, where carryIn is
+    * the last `tailN` rows globally before the partition. Also returns
+    * the global tail (the last ≤ tailN rows of the whole stream).
     */
-  def boundaryExchange[T, U: ClassTag](in: Dataset[T], tailN: Int)(
-      f: (List[T], Iterator[T]) => Iterator[U])(
-      toDataset: RDD[U] => Dataset[U]): (Dataset[U], List[T]) = {
+  def boundaryExchange[T](in: Dataset[T], tailN: Int, outSchema: StructType)(
+      f: (List[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow])
+      : (DataFrame, List[InternalRow]) = {
     require(tailN >= 0)
-    prefixCarry(in, Seq(col("seq")))(lastN(_, tailN))(tailCarries(_, tailN))(f)(toDataset)
+    prefixCarry(in, Seq(col("seq")), outSchema)(lastN(_, tailN))(tailCarries(_, tailN))(f)
   }
 
   /** The last ≤ n elements of a partition (ring buffer). */
@@ -102,16 +123,17 @@ private[graft] object OrderedExec {
     buf.toList
   }
 
-  /** Dense ordinals 0..n-1 in `by` order: `stamp(ordinal, element)` per
-    * element, from per-partition counts and their driver prefix sum (no
-    * global window).
+  /** Dense ordinals 0..n-1 in `by` order, from per-partition counts and
+    * their driver prefix sum (no global window). `stamp()` runs once per
+    * task and returns the per-row `(ordinal, row) => output row`.
     */
-  def denseOrdinals[T, U: ClassTag](in: Dataset[T], by: Seq[Column])(
-      stamp: (Long, T) => U)(toDataset: RDD[U] => Dataset[U]): Dataset[U] =
-    prefixCarry(in, by)(countRows)(_.scanLeft(0L)(_ + _)) { (offset, it) =>
+  def denseOrdinals[T](in: Dataset[T], by: Seq[Column], outSchema: StructType)(
+      stamp: () => (Long, InternalRow) => InternalRow): DataFrame =
+    prefixCarry(in, by, outSchema)(countRows)(_.scanLeft(0L)(_ + _)) { (offset, it) =>
+      val f = stamp()
       var k = offset
-      it.map { t => val u = stamp(k, t); k += 1; u }
-    }(toDataset)._1
+      it.map { r => val u = f(k, r); k += 1; u }
+    }._1
 
   /** Long loop, not Iterator.size: `.size` returns Int and wraps negative
     * past 2^31 rows per partition — inside the design envelope at
@@ -130,18 +152,33 @@ private[graft] object OrderedExec {
     */
   def scanCombine[A, B: TypeTag](in: Dataset[Elem[A]], zero: B,
                                  step: (B, A) => B,
-                                 combine: (B, B) => B): Dataset[Elem[B]] =
-    prefixCarry(in, Seq(col("seq")))(_.foldLeft(zero)((b, e) => step(b, e.value)))(
+                                 combine: (B, B) => B): Dataset[Elem[B]] = {
+    val dec = decoder(in)
+    val out = Elem.enc[B]
+    val enc = encoderFor(out)
+    prefixCarry(in, Seq(col("seq")), enc.schema)(
+      _.map(dec.createDeserializer()).foldLeft(zero)((b, e) => step(b, e.value)))(
       _.scanLeft(zero)(combine)) { (carry, it) =>
+      val (d, s) = (dec.createDeserializer(), enc.createSerializer())
       var acc = carry
-      it.map { e => acc = step(acc, e.value); Elem(e.seq, acc) }
-    }(in.sparkSession.createDataset(_)(Elem.enc[B]))._1
+      it.map { r => val e = d(r); acc = step(acc, e.value); s(Elem(e.seq, acc)) }
+    }._1.as(out)
+  }
 
-  /** Typed boundary exchange: [[boundaryExchange]] over `Elem[A]`. */
-  def mapWithCarry[A, B: TypeTag](in: Dataset[Elem[A]], tailN: Int)(
-      f: (List[Elem[A]], Iterator[Elem[A]]) => Iterator[Elem[B]])
-      : (Dataset[Elem[B]], List[Elem[A]]) =
-    boundaryExchange(in, tailN)(f)(in.sparkSession.createDataset(_)(Elem.enc[B]))
+  /** Boundary exchange over decoded elements: [[boundaryExchange]] with
+    * `in`'s elements (carries included) decoded at the closure boundary
+    * and the results encoded by `out`.
+    */
+  def mapWithCarry[T, U](in: Dataset[T], tailN: Int, out: Encoder[U])(
+      f: (List[T], Iterator[T]) => Iterator[U]): (Dataset[U], List[T]) = {
+    val dec = decoder(in)
+    val enc = encoderFor(out)
+    val (df, tail) = boundaryExchange(in, tailN, enc.schema) { (carry, it) =>
+      val d = dec.createDeserializer()
+      f(carry.map(d), it.map(d)).map(enc.createSerializer())
+    }
+    (df.as(out), tail.map(dec.createDeserializer()))
+  }
 
   /** Sequential fallback for arbitrary (non-mergeable) state transitions:
     * one sorted partition, one pass. Correct for any closure; only for

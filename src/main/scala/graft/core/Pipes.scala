@@ -206,7 +206,7 @@ object Pipes {
     */
   def pairs[A: TypeTag]: Pipe[A, (A, A)] = new Pipe[A, (A, A)] {
     def apply(in: SStream[A]): SStream[(A, A)] = {
-      val (out, _) = OrderedExec.mapWithCarry[A, (A, A)](in.ds, 1) { (carry, it) =>
+      val (out, _) = OrderedExec.mapWithCarry(in.ds, 1, Elem.enc[(A, A)]) { (carry, it) =>
         var prev: Option[Elem[A]] = carry.lastOption
         it.flatMap { e =>
           val r = prev.map(p => Elem(e.seq, (p.value, e.value)))
@@ -229,7 +229,7 @@ object Pipes {
     def apply(in: SStream[A]): SStream[Seq[A]] = {
       require(n >= 1, "consecutive: n must be >= 1")
       implicit val e: Encoder[Elem[Seq[A]]] = Elem.enc[Seq[A]]
-      val (out, globalTail) = OrderedExec.mapWithCarry[A, Seq[A]](in.ds, n) { (carry, it) =>
+      val (out, globalTail) = OrderedExec.mapWithCarry(in.ds, n, e) { (carry, it) =>
         var win = carry.map(_.value).toVector.takeRight(n)
         it.map { e =>
           val r = Elem(e.seq, win: Seq[A])

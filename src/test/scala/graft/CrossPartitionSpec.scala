@@ -2,6 +2,8 @@ package graft
 
 import graft.core._
 import graft.operators._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -125,8 +127,12 @@ class CrossPartitionSpec extends SparkSpec {
     val last = xs.last
     val boom: Long => Long = v => if (v == last) throw new IllegalStateException("boom") else v
     val df = rows(xs)
-    intercept[Exception] { // throws in the finish pass, after the partials job
+    intercept[Exception] { // throws in the finish, which runs in the consumer's job
       RowExec.mapWithCarry(df, 1, df.schema)((_, it) => it.map(r => Row(r.getLong(0), boom(r.getLong(1)))))
+        .count()
+    }
+    intercept[Exception] { // throws in the partials job, while the sorted copy fills
+      (src |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + boom(a))(_ + _)).into(Sinks.count)
     }
     intercept[Exception] {
       (src |> Pipes.map[Long, Long](boom) |> Pipes.pairs[Long]).into(Sinks.count)
@@ -140,6 +146,65 @@ class CrossPartitionSpec extends SparkSpec {
     while (left.nonEmpty && System.nanoTime() < deadline) { Thread.sleep(200); left = lingering }
     assert(left.isEmpty, s"lingering caches: ${
       spark.sparkContext.getPersistentRDDs.filter(e => left(e._1)).values.map(_.toString)}")
+  }
+
+  test("an ordered op builds in 3 jobs; each count of its output is one job over the sorted copy") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // rows in shuffled order, read from a local relation (no exchange of
+    // their own)
+    val perm = new scala.util.Random(5).shuffle(xs.indices.toVector)
+    val df = perm.map(i => (i.toLong, xs(i))).toDF("seq", "v")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
+    }
+    def jobsOf[T](body: => T): (T, List[SparkListenerJobStart]) = {
+      ListenerBusDrain(sc); jobs.clear()
+      val r = body
+      ListenerBusDrain(sc); (r, jobs.asScala.toList)
+    }
+    def describe(js: List[SparkListenerJobStart]): String =
+      js.map(j => s"job ${j.jobId}: ${j.stageInfos.map(_.name).mkString(", ")}").mkString("\n")
+    sc.addSparkListener(listener)
+    try {
+      // range sample, range shuffle map, then one job that sorts, fills
+      // the copy and summarizes the partitions
+      val (out, build) = jobsOf(RowExec.runningSumLong(df, col("v"), "rs"))
+      val buildJobs = build.size
+      assert(buildJobs == 3, describe(build))
+      for (_ <- 1 to 2) {
+        // the finish over the copy: one stage, nothing upstream of it
+        // (no shuffle-map stage, no sort), not even a skipped one
+        val (n, count) = jobsOf(out.rdd.count())
+        assert(n == N)
+        val oneStageNoParents = count.size == 1 && count.head.stageInfos.size == 1 &&
+          count.head.stageInfos.head.parentIds.isEmpty
+        assert(oneStageNoParents, describe(count))
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("tied sort keys: dense ordinals and a lookback over them agree across actions") {
+    import spark.implicits._
+    // 50k rows in shuffled order, sort key i % 7: every key ~7k-fold tied
+    val perm = new scala.util.Random(13).shuffle(xs.indices.toVector)
+    val df = perm.map(i => (i.toLong, i % 7L, xs(i))).toDF("id", "k", "v").repartition(8)
+    val dense = RowExec.withDenseSeq(df, Seq(col("k")))
+    def rowsOf(d: DataFrame): List[(Long, Long, Long, Long)] =
+      d.orderBy("seq").select("seq", "id", "k", "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toList
+    val first = rowsOf(dense)
+    assert(first.map(_._1) == (0L until N.toLong).toList)
+    assert(first.map(_._3).sliding(2).forall { case Seq(a, b) => a <= b })
+    // the order among ties is fixed once, by the one materialized copy
+    assert(rowsOf(dense) == first)
+    val n = 3
+    val vs = first.map(_._4).toVector
+    val windows = RowExec.consecutiveDf(dense, "v", n).orderBy("seq")
+      .select("window").collect().map(_.getSeq[Long](0).toList).toList
+    assert(windows == vs.indices.map(i => vs.slice(math.max(0, i - n), i).toList).toList)
   }
 
   test("foldr on a large reversed stream == foldRight") {

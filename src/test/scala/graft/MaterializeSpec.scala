@@ -48,6 +48,26 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("reliable mode checkpoints an ordered op's sorted copy to the checkpoint dir") {
+    import spark.implicits._
+    val df = (0 until 5000).map(i => (i.toLong, (i * 7919L) % 1000 - 500)).toDF("seq", "v").repartition(4)
+    def sums(out: org.apache.spark.sql.DataFrame): List[Long] =
+      out.orderBy("seq").select("rs").collect().map(_.getLong(0)).toList
+    val local = sums(RowExec.runningSumLong(df, col("v"), "rs"))
+    withReliable {
+      val dir = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      def rddDirs: Seq[java.io.File] =
+        Option(dir.listFiles).toSeq.flatten.filter(_.getName.startsWith("rdd-"))
+      val before = rddDirs.toSet
+      val out = RowExec.runningSumLong(df, col("v"), "rs")
+      val added = rddDirs.filterNot(before)
+      // the copy is the one thing the op materializes
+      assert(added.size == 1, s"checkpointed RDD dirs added: $added")
+      assert(added.head.list().exists(_.startsWith("part-")), s"no part files in ${added.head}")
+      assert(sums(out) == local)
+    }
+  }
+
   test("without the flag, reliable dir alone does not change the default path") {
     // flag unset → localCheckpoint even with a checkpoint dir configured
     assert(spark.conf.getOption(Materialize.ReliableKey).isEmpty)
